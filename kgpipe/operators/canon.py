@@ -323,22 +323,39 @@ def canonicalize(raw_triples: DataFrame, canon_map: DataFrame) -> DataFrame:
 
 
 def _lev(a: str, b: str, cap: int) -> int:
-    """Plain Levenshtein (matches Spark's F.levenshtein), early-exit > cap."""
+    """Plain Levenshtein (matches Spark's F.levenshtein) when it is <= cap,
+    else cap + 1.
+
+    Banded DP: only cells with |i - j| <= cap are computed, 2*cap + 1 per
+    row instead of len(b) + 1. Exact up to cap: an edit path through a cell
+    off the band already costs more than cap, and cell values only grow
+    along a path, so every path of cost <= cap stays inside the band.
+    Values saturate at cap + 1, and a row with no cell <= cap ends early.
+    """
     la, lb = len(a), len(b)
+    over = cap + 1
     if abs(la - lb) > cap:
-        return cap + 1
-    prev = list(range(lb + 1))
+        return over
+    w = 2 * cap + 1
+    # band cell d of row i is DP cell (i, i - cap + d); off-grid reads `over`
+    prev = [d - cap if 0 <= d - cap <= lb else over for d in range(w)]
     for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        best = cur[0]
-        for j in range(1, lb + 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
-                         prev[j - 1] + (a[i - 1] != b[j - 1]))
-            best = min(best, cur[j])
-        if best > cap:
-            return cap + 1
+        cur = [over] * w
+        ai = a[i - 1]
+        lo = cap - i  # band cell of column 0
+        if lo >= 0:
+            cur[lo] = i
+        for d in range(max(lo + 1, 0), min(w, lb - i + cap + 1)):
+            v = prev[d] + (ai != b[i - cap + d - 1])
+            if d + 1 < w and prev[d + 1] < v:
+                v = prev[d + 1] + 1
+            if d and cur[d - 1] < v:
+                v = cur[d - 1] + 1
+            cur[d] = v if v < over else over
+        if min(cur) > cap:
+            return over
         prev = cur
-    return prev[lb]
+    return prev[lb - la + cap]
 
 
 def build_canon_map_local(candidate_dict, max_lev: int = 2):

@@ -80,23 +80,39 @@ def build_gazetteer(candidate_dict: pd.DataFrame) -> dict[int, tuple]:
     candidate span; the downstream linker join re-checks the surface
     against the real alias, so precision is unaffected (and at 2^64 the
     collision odds are negligible anyway).
+
+    Vectorized: one ``hash_array`` over every alias token of the
+    dictionary (a token's hash depends on the token alone, so one call
+    equals one call per alias), then per alias length a column fold of the
+    (aliases, length) token-hash matrix. Aliases longer than
+    MAX_ALIAS_TOKENS are skipped. A duplicate alias keeps the class of its
+    LAST dictionary row; lengths appear in order of first occurrence.
     """
     cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
-    by_len: dict[int, list[tuple[int, int]]] = {}
-    for alias, cls in zip(candidate_dict["alias"], candidate_dict["ent_class"]):
-        toks = alias.split()
-        if not toks or len(toks) > MAX_ALIAS_TOKENS:
-            continue
-        th = pd.util.hash_array(np.array(toks, dtype=object))
-        h = _fold_hashes(th, len(toks), 1)[0]
-        by_len.setdefault(len(toks), []).append((int(h), cls_idx[cls]))
+    toks = [a.split() for a in candidate_dict["alias"]]
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    keep = np.flatnonzero((lens > 0) & (lens <= MAX_ALIAS_TOKENS))
+    if not keep.size:
+        return {}
+    lens = lens[keep]
+    classes = candidate_dict["ent_class"].to_numpy()[keep]
+    cls = np.array([cls_idx[c] for c in classes], dtype=np.int8)
+    tok_h = pd.util.hash_array(np.array(
+        [t for i in keep.tolist() for t in toks[i]], dtype=object))
+    first_tok = np.cumsum(lens) - lens
+    uniq, first_seen = np.unique(lens, return_index=True)
     gaz: dict[int, tuple] = {}
-    for ln, pairs in by_len.items():
-        dedup = dict(pairs)  # duplicate alias: last class wins (dict parity)
-        keys = np.fromiter(dedup.keys(), dtype=np.uint64, count=len(dedup))
-        vals = np.fromiter(dedup.values(), dtype=np.int8, count=len(dedup))
-        order = np.argsort(keys)
-        gaz[ln] = (keys[order], vals[order])
+    for ln in uniq[np.argsort(first_seen)].tolist():
+        sel = np.flatnonzero(lens == ln)
+        base = first_tok[sel]
+        h = tok_h[base]
+        with np.errstate(over="ignore"):
+            for k in range(1, ln):
+                h = h * _FNV + tok_h[base + k]
+        # np.unique keeps the first of equal keys: run it over the reversed
+        # rows so the last dictionary row of a duplicate alias wins
+        keys, last = np.unique(h[::-1], return_index=True)
+        gaz[ln] = (keys, cls[sel][::-1][last])
     return gaz
 
 

@@ -11,16 +11,21 @@ checkpointed and resumed independently (operators/checkpoint.py).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator, MutableMapping
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgpipe.operators.canon import build_canon_map, canonicalize
+from kgpipe.operators.canon import (
+    build_canon_map,
+    build_canon_map_local,
+    canonicalize,
+)
 from kgpipe.operators.labeler import label_transcripts
-from kgpipe.operators.linker import dict_to_df, link_entities
+from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
-from kgpipe.operators.relations import extract_triples
+from kgpipe.operators.relations import extract_triples, extract_triples_fused
 from kgpipe.schemas import TRANSCRIPTS
 
 
@@ -46,12 +51,17 @@ def locate_transcripts(fixture_dir: str) -> str:
     formats logs arrive in (sources/transcripts.py reads any of them
     schema-enforced). Shared by BOTH fixture-dir entry points so the
     ingestion surface cannot silently differ between the plain and the
-    checkpointed pipeline."""
-    for ext in ("parquet", "jsonl", "csv"):
-        p = os.path.join(fixture_dir, f"transcripts.{ext}")
+    checkpointed pipeline.
+
+    Raises ``FileNotFoundError`` naming every probed path when none
+    exists."""
+    probed = [os.path.join(fixture_dir, f"transcripts.{ext}")
+              for ext in ("parquet", "jsonl", "csv")]
+    for p in probed:
         if os.path.exists(p):
             return p
-    return os.path.join(fixture_dir, "transcripts.parquet")
+    raise FileNotFoundError(
+        f"no transcripts in {fixture_dir}: probed {', '.join(probed)}")
 
 
 def salt(df: DataFrame, n_salts: int = 8) -> DataFrame:
@@ -71,13 +81,51 @@ LOCAL_CANON_MAX_DICT = 200_000
 
 def canon_map_for(spark: SparkSession, candidate_dict: pd.DataFrame,
                   dict_df: DataFrame, cc_algo: str = "two_phase") -> DataFrame:
-    from kgpipe.operators.canon import build_canon_map, build_canon_map_local
-
     if len(candidate_dict) > LOCAL_CANON_MAX_DICT:
         return build_canon_map(dict_df, algo=cc_algo)
     pdf = build_canon_map_local(candidate_dict)
     return spark.createDataFrame(
         pdf, schema="entity_id string, canonical_id string")
+
+
+class LazyFrames(MutableMapping):
+    """Pipeline outputs by name; a name defined with a builder is built on
+    first access and then kept. Membership tests and ``keys()`` do not
+    build anything."""
+
+    def __init__(self) -> None:
+        self._built: dict[str, DataFrame] = {}
+        self._builders: dict[str, Callable[[], DataFrame]] = {}
+
+    def define(self, name: str, build: Callable[[], DataFrame]) -> None:
+        self._builders[name] = build
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            if name not in self._builders:
+                raise KeyError(name)
+            self._built[name] = self._builders.pop(name)()
+        return self._built[name]
+
+    def __setitem__(self, name: str, df: DataFrame) -> None:
+        self._builders.pop(name, None)
+        self._built[name] = df
+
+    def __delitem__(self, name: str) -> None:
+        if name in self._built:
+            del self._built[name]
+        else:
+            del self._builders[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._built or name in self._builders
+
+    def __iter__(self) -> Iterator[str]:
+        yield from list(self._built)
+        yield from list(self._builders)
+
+    def __len__(self) -> int:
+        return len(self._built) + len(self._builders)
 
 
 def run_pipeline(
@@ -89,8 +137,9 @@ def run_pipeline(
     predicates=None,
     labeler_model=None,
     extractor: str = "fused",
-) -> dict[str, DataFrame]:
-    """Run all stages; returns the intermediate + final DataFrames (lazy).
+) -> LazyFrames:
+    """Build the pipeline plan over ``transcripts``; returns its named
+    DataFrames (all lazy: no Spark action runs here).
 
     ``labeler_model``: optional ``TrainedLabeler`` (operators/train.py) —
     when given, labeling uses the learned perceptron weights instead of
@@ -107,24 +156,28 @@ def run_pipeline(
     ``"exploded"`` is the window-over-mentions reference plan. Output
     equality between the two is pinned by tests/test_relations_fused.py.
 
-    Return contract: every value is LAZY and only ``triples`` is the
-    product output. ``mentions``/``linked`` cost nothing unless a
-    consumer evaluates them, and on the fused small-dict path
-    ``raw_triples`` (the pre-canonicalization form) is an INDEPENDENT
-    plan from ``triples`` — they share no subtree, so evaluating both
-    runs the corpus scan + inline labeling twice. Consumers that need
-    both should evaluate ``triples`` and derive the raw view from the
-    exploded intermediates instead.
+    Return contract: a ``LazyFrames`` mapping with the keys ``triples``
+    (the product output), ``canon_map``, ``labeled``, ``mentions``,
+    ``linked`` and ``raw_triples`` (pre-canonicalization). ``triples`` and
+    ``canon_map`` are built here; the others are built on first access
+    (``out["linked"]``), so a product run pays driver-side plan build for
+    the product plan only. On the fused small-dictionary path
+    ``raw_triples`` is an INDEPENDENT plan from ``triples`` — they share
+    no subtree, so evaluating both runs the corpus scan + inline labeling
+    twice. Consumers that need both should evaluate ``triples`` and derive
+    the raw view from the exploded intermediates instead. The mapping
+    accepts assignment, e.g. ``out["gold"] = ...``.
     """
+    out = LazyFrames()
     if labeler_model is not None:
         from kgpipe.operators.train import label_transcripts_trained
 
-        labeled = label_transcripts_trained(
-            spark, transcripts, labeler_model, candidate_dict)
+        out.define("labeled", lambda: label_transcripts_trained(
+            spark, transcripts, labeler_model, candidate_dict))
     else:
-        labeled = label_transcripts(spark, transcripts, candidate_dict)
-    mentions = extract_mentions(labeled)
-    dict_df = dict_to_df(spark, candidate_dict)
+        out.define("labeled", lambda: label_transcripts(
+            spark, transcripts, candidate_dict))
+    out.define("mentions", lambda: extract_mentions(out["labeled"]))
     # no persist anywhere: with the window-free top-1 linker and the
     # single-pass triple extractor, every intermediate is referenced exactly
     # once, so the plan is one straight pipeline (scan -> Arrow UDF ->
@@ -132,14 +185,13 @@ def run_pipeline(
     # dedup). Block-manager persists measurably ANTI-scaled at high core
     # counts (MemoryStore unroll contention: 46s vs 16s to build the same
     # 2.8M-row stage at local[32]).
-    from kgpipe.operators.linker import top1_dict
-
-    linked = link_entities(
-        mentions, dict_to_df(spark, top1_dict(candidate_dict)),
-        k=1, ranked=False)
+    out.define("linked", lambda: link_entities(
+        out["mentions"], dict_to_df(spark, top1_dict(candidate_dict)),
+        k=1, ranked=False))
+    # eager on every path (one small createDataFrame); the
+    # large-dictionary canon map is built from it
+    dict_df = dict_to_df(spark, candidate_dict)
     if extractor == "fused":
-        from kgpipe.operators.relations import extract_triples_fused
-
         # Labeling runs INSIDE the digest UDF on the product path: the
         # labeled->digest two-UDF chain cannot be merged by Spark
         # (dependent Python UDFs), so it ships every turn's text across
@@ -153,46 +205,33 @@ def run_pipeline(
             if inline_src.rdd.getNumPartitions() < parallelism:
                 inline_src = inline_src.repartition(parallelism)
         inline_mode = "gaz" if labeler_model is None else "trained"
-        raw_triples = extract_triples_fused(
+        out.define("raw_triples", lambda: extract_triples_fused(
             spark, inline_src, candidate_dict, window=window,
             predicates=predicates, inline_labeler=inline_mode,
-            model=labeler_model)
-        if len(candidate_dict) <= LOCAL_CANON_MAX_DICT:
-            # single-shuffle product path: the canon map (driver-side,
-            # dict-derived, broadcast-sized by construction) is composed
-            # into the digest UDF's link map and dedup happens per turn —
-            # the generic canonicalize stage's two broadcast joins and
-            # corpus-scale dedup exchange vanish. `raw_triples` above
-            # stays the pre-canonicalization form (lazy; consumers such
-            # as the streaming-parity tests pay for it only if they
-            # evaluate it).
-            from kgpipe.operators.canon import build_canon_map_local
-
-            canon_pdf = build_canon_map_local(candidate_dict)
-            canon_d = dict(zip(canon_pdf["entity_id"],
-                               canon_pdf["canonical_id"]))
-            triples = extract_triples_fused(
-                spark, inline_src, candidate_dict, window=window,
-                predicates=predicates, canon=canon_d, dedup=True,
-                inline_labeler=inline_mode, model=labeler_model)
-            canon_map = spark.createDataFrame(
-                canon_pdf, schema="entity_id string, canonical_id string")
-        else:
-            canon_map = build_canon_map(dict_df, algo=cc_algo)
-            triples = canonicalize(raw_triples, canon_map)
+            model=labeler_model))
     else:
-        raw_triples = extract_triples(spark, linked, window=window,
-                                      predicates=predicates)
-        canon_map = canon_map_for(spark, candidate_dict, dict_df, cc_algo)
-        triples = canonicalize(raw_triples, canon_map)
-    return {
-        "labeled": labeled,
-        "mentions": mentions,
-        "linked": linked,
-        "raw_triples": raw_triples,
-        "canon_map": canon_map,
-        "triples": triples,
-    }
+        out.define("raw_triples", lambda: extract_triples(
+            spark, out["linked"], window=window, predicates=predicates))
+    if extractor == "fused" and len(candidate_dict) <= LOCAL_CANON_MAX_DICT:
+        # single-shuffle product path: the canon map (driver-side,
+        # dict-derived, broadcast-sized by construction) is composed
+        # into the digest UDF's link map and dedup happens per turn —
+        # the generic canonicalize stage's two broadcast joins and
+        # corpus-scale dedup exchange vanish.
+        canon_pdf = build_canon_map_local(candidate_dict)
+        canon_d = dict(zip(canon_pdf["entity_id"],
+                           canon_pdf["canonical_id"]))
+        out["triples"] = extract_triples_fused(
+            spark, inline_src, candidate_dict, window=window,
+            predicates=predicates, canon=canon_d, dedup=True,
+            inline_labeler=inline_mode, model=labeler_model)
+        out["canon_map"] = spark.createDataFrame(
+            canon_pdf, schema="entity_id string, canonical_id string")
+    else:
+        out["canon_map"] = canon_map_for(spark, candidate_dict, dict_df,
+                                         cc_algo)
+        out["triples"] = canonicalize(out["raw_triples"], out["canon_map"])
+    return out
 
 
 def run_pipeline_checkpointed(
@@ -280,7 +319,6 @@ def run_pipeline_checkpointed(
     run = CheckpointedRun(spark, run_dir)
 
     if stage_layout == "digests":
-        from kgpipe.operators.canon import build_canon_map_local
         from kgpipe.operators.relations import (
             triples_from_digests,
             turn_digests,
@@ -329,8 +367,6 @@ def run_pipeline_checkpointed(
     ).hexdigest()[:16]
     fp3 = hashlib.sha256(f"{fp2}|triples|cc={cc_algo}|v=1".encode()).hexdigest()[:16]
 
-    from kgpipe.operators.linker import top1_dict
-
     top1_df = dict_to_df(spark, top1_dict(candidate_dict))
     def _label(df: DataFrame) -> DataFrame:
         if labeler_model is not None:
@@ -360,13 +396,44 @@ def run_pipeline_checkpointed(
             "metrics": run.metrics, "run": run}
 
 
+def fit_labeler(spark: SparkSession, fixture_dir: str,
+                candidate_dict: pd.DataFrame, train_sample: int = 2000):
+    """Fit the structured perceptron (operators/train.py) driver-side on a
+    bounded sample of the fixture dir's transcripts, in whichever format
+    ``locate_transcripts`` finds."""
+    from kgpipe.operators.train import fit_perceptron, sample_texts
+    from kgpipe.sources.transcripts import read_transcripts_any
+
+    tpath = locate_transcripts(fixture_dir)
+    if tpath.endswith(".parquet"):
+        sample = sample_texts(tpath, train_sample)
+    else:
+        # text formats lack parquet's metadata row count / row-take, so
+        # sample via Spark: the n smallest rows by a content hash — a
+        # deterministic uniform draw with NO head bias (sample(frac)
+        # .limit(n) trims in partition order, i.e. a head; and frac
+        # capped at 1.0 degenerates to a bare head-take). Spark plans
+        # orderBy+limit as TakeOrderedAndProject: per-partition top-K
+        # heaps + a driver merge of K rows, not a full sort.
+        sample = (read_transcripts_any(spark, tpath)
+                  .select("text",
+                          F.xxhash64("conv_id", "turn_idx", "text")
+                          .alias("_h"))
+                  .orderBy("_h").limit(train_sample)
+                  .toPandas()["text"])
+    return fit_perceptron(sample, candidate_dict)
+
+
 def run_from_dir(spark: SparkSession, fixture_dir: str,
                  window: int = 3, predicates=None,
                  trained: bool = False,
-                 train_sample: int = 2000) -> dict[str, DataFrame]:
-    """Run the pipeline over a fixture directory (transcripts.parquet +
-    candidate_dict.parquet [+ gold_triples.parquet] [+ predicates.parquet:
-    a (phrase, pred) table overriding the default predicate config]).
+                 train_sample: int = 2000,
+                 cc_algo: str = "two_phase") -> LazyFrames:
+    """Run the pipeline over a fixture directory (transcripts.parquet,
+    .jsonl or .csv + candidate_dict.parquet [+ gold_triples.parquet]
+    [+ predicates.parquet: a (phrase, pred) table overriding the default
+    predicate config]). Returns ``run_pipeline``'s mapping, plus ``gold``
+    when the dir has a gold table.
 
     ``trained=True`` fits the structured perceptron on a bounded sample of
     the input (driver-side, weights broadcast) and labels with it instead
@@ -379,8 +446,7 @@ def run_from_dir(spark: SparkSession, fixture_dir: str,
     # first match wins, schema-enforced either way
     from kgpipe.sources.transcripts import read_transcripts_any
 
-    tpath = locate_transcripts(fixture_dir)
-    transcripts = read_transcripts_any(spark, tpath)
+    transcripts = read_transcripts_any(spark, locate_transcripts(fixture_dir))
     candidate_dict = pd.read_parquet(
         os.path.join(fixture_dir, "candidate_dict.parquet"))
     if predicates is None:
@@ -388,27 +454,10 @@ def run_from_dir(spark: SparkSession, fixture_dir: str,
         predicates = load_predicates(ppath) if os.path.exists(ppath) else None
     model = None
     if trained:
-        from kgpipe.operators.train import fit_perceptron, sample_texts
-
-        if tpath.endswith(".parquet"):
-            sample = sample_texts(tpath, train_sample)
-        else:
-            # text formats lack parquet's metadata row count / row-take, so
-            # sample via Spark: the n smallest rows by a content hash — a
-            # deterministic uniform draw with NO head bias (sample(frac)
-            # .limit(n) trims in partition order, i.e. a head; and frac
-            # capped at 1.0 degenerates to a bare head-take). Spark plans
-            # orderBy+limit as TakeOrderedAndProject: per-partition top-K
-            # heaps + a driver merge of K rows, not a full sort.
-            sample = (transcripts
-                      .select("text",
-                              F.xxhash64("conv_id", "turn_idx", "text")
-                              .alias("_h"))
-                      .orderBy("_h").limit(train_sample)
-                      .toPandas()["text"])
-        model = fit_perceptron(sample, candidate_dict)
+        model = fit_labeler(spark, fixture_dir, candidate_dict, train_sample)
     out = run_pipeline(spark, transcripts, candidate_dict, window=window,
-                       predicates=predicates, labeler_model=model)
+                       cc_algo=cc_algo, predicates=predicates,
+                       labeler_model=model)
     gold_path = os.path.join(fixture_dir, "gold_triples.parquet")
     if os.path.exists(gold_path):
         out["gold"] = spark.read.parquet(gold_path)

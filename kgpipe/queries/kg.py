@@ -23,6 +23,8 @@ uses the sf0.01-sized corpus.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,27 +33,37 @@ from kgpipe.queries.registry import register
 
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
-# Generated (or reused from cache) at import: the driver may run an oracle
-# before its matching Spark query, so the gold parquet must exist by the
-# time the registry is populated. Generation is pure pandas, seconds at
-# sf0.01, and cached on disk across sessions. GUARDED: importing any
-# kgpipe.queries submodule imports this one, so a fixture-dir write
-# failure (read-only checkout, full disk) must degrade the kg_* rows to
-# rows-only checks — never break the whole registry.
-try:
-    ORACLE_FIXTURE_DIR: str | None = materialize("sf0.01")
-except Exception:  # noqa: BLE001 — any generation failure degrades, see above
-    ORACLE_FIXTURE_DIR = None
+
+@functools.cache
+def oracle_fixture_dir() -> str | None:
+    """The sf0.01 gold fixture dir the kg_* oracles read, generated (or
+    reused from its on-disk cache) on first oracle access — not at import,
+    so importing the registry writes nothing. An oracle may run before its
+    matching Spark query, so resolving an oracle must produce the gold
+    parquet. Generation is pure pandas, seconds at sf0.01.
+    GUARDED: a fixture-dir write failure (read-only checkout, full disk)
+    returns None, which degrades the kg_* rows to rows-only checks — never
+    breaks the whole registry."""
+    try:
+        return materialize("sf0.01")
+    except Exception:  # noqa: BLE001 — any generation failure degrades
+        return None
 
 
-def _gold(sql: str) -> str | None:
-    """Oracle SQL when the gold fixture is readable, else None (the
-    registry treats None as a rows-only registration)."""
-    return sql if ORACLE_FIXTURE_DIR is not None else None
+# stands for the fixture dir in the oracle SQL until it is resolved
+_FIXTURE = "@ORACLE_FIXTURE_DIR@"
+_GOLD_T = f"read_parquet('{_FIXTURE}/gold_triples.parquet')"
+_GOLD_M = f"read_parquet('{_FIXTURE}/gold_mentions.parquet')"
 
 
-_GOLD_T = f"read_parquet('{ORACLE_FIXTURE_DIR}/gold_triples.parquet')"
-_GOLD_M = f"read_parquet('{ORACLE_FIXTURE_DIR}/gold_mentions.parquet')"
+def _gold(sql: str):
+    """Oracle SQL over the gold fixture, resolved on first access (the
+    registry treats a None resolution as a rows-only registration)."""
+    def resolve() -> str | None:
+        d = oracle_fixture_dir()
+        return None if d is None else sql.replace(_FIXTURE, d)
+
+    return resolve
 
 
 def _session_key(spark: SparkSession) -> str:

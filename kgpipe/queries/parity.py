@@ -27,12 +27,12 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     from kgpipe.queries import kg as _kg
 
     scale = _kg._scale_for(sf_dir)
-    # ORACLE_FIXTURE_DIR is None when gold-fixture generation failed at
-    # import (kg.py degrades the kg_* rows to rows-only) — `None in sql`
-    # would TypeError on every oracle, so guard the rewrite
-    if (scale != "sf0.01" and _kg.ORACLE_FIXTURE_DIR is not None
-            and _kg.ORACLE_FIXTURE_DIR in sql):
-        sql = sql.replace(_kg.ORACLE_FIXTURE_DIR, materialize(scale))
+    # the fixture dir is None when gold-fixture generation failed (kg.py
+    # degrades the kg_* rows to rows-only) — `None in sql` would TypeError
+    # on every oracle, so guard the rewrite
+    gold_dir = _kg.oracle_fixture_dir()
+    if scale != "sf0.01" and gold_dir is not None and gold_dir in sql:
+        sql = sql.replace(gold_dir, materialize(scale))
     con = duckdb.connect()
     for t in TABLES:
         paths = glob.glob(f"{sf_dir}/{t}.parquet")

@@ -66,6 +66,50 @@ def test_local_equals_distributed(spark):
     assert local, "fixture must exercise at least one merged variant"
 
 
+def _lev_full(a: str, b: str) -> int:
+    """Full Levenshtein DP, every cell, no cap: the reference for _lev."""
+    prev = list(range(len(b) + 1))
+    for i in range(1, len(a) + 1):
+        cur = [i] + [0] * len(b)
+        for j in range(1, len(b) + 1):
+            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
+                         prev[j - 1] + (a[i - 1] != b[j - 1]))
+        prev = cur
+    return prev[-1]
+
+
+@pytest.mark.parametrize("cap", [0, 1, 2, 3])
+def test_banded_lev_equals_full_dp(cap):
+    """The banded _lev, capped at cap + 1, equals the full DP: random
+    strings over a 3-letter alphabet, lengths 0-10; half the pairs are a
+    string and a copy of it with up to cap + 2 random edits."""
+    import random
+
+    from kgpipe.operators.canon import _lev
+
+    def edit(s: str) -> str:
+        for _ in range(rng.randint(0, cap + 2)):
+            i = rng.randint(0, len(s))
+            op = rng.choice("ids") if s else "i"
+            if op == "i":
+                s = s[:i] + rng.choice("abc") + s[i:]
+            else:
+                i = min(i, len(s) - 1)
+                s = s[:i] + (rng.choice("abc") if op == "s" else "") + s[i + 1:]
+        return s
+
+    rng = random.Random(cap)
+    n_within = 0
+    for k in range(20_000):
+        a = "".join(rng.choice("abc") for _ in range(rng.randint(0, 10)))
+        b = edit(a) if k % 2 else "".join(
+            rng.choice("abc") for _ in range(rng.randint(0, 10)))
+        want = min(_lev_full(a, b), cap + 1)
+        assert _lev(a, b, cap) == want, (a, b, cap)
+        n_within += want <= cap
+    assert n_within > 2_000  # the exact branch is exercised, not just the cap
+
+
 def test_similarity_block_cap_bounds_adversarial_block(spark):
     """Shared-prefix adversarial dictionary: one (class, first-token) block
     whose EVERY pair is a true lev<=2 duplicate. Uncapped all-pairs is

@@ -89,3 +89,79 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
         }
 
     assert rows(packed) == rows(direct)
+
+
+def _per_alias_gazetteer(candidate_dict):
+    """Reference builder: one hash_array call per alias, a dict per token
+    length (last class wins), sorted keys. The vectorized build_gazetteer
+    must reproduce it bit for bit."""
+    import numpy as np
+
+    from kgpipe.operators.labeler import MAX_ALIAS_TOKENS, _fold_hashes
+    from kgpipe.schemas import ENT_CLASSES
+
+    cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
+    by_len = {}
+    for alias, cls in zip(candidate_dict["alias"],
+                          candidate_dict["ent_class"]):
+        toks = alias.split()
+        if not toks or len(toks) > MAX_ALIAS_TOKENS:
+            continue
+        th = pd.util.hash_array(np.array(toks, dtype=object))
+        h = _fold_hashes(th, len(toks), 1)[0]
+        by_len.setdefault(len(toks), []).append((int(h), cls_idx[cls]))
+    gaz = {}
+    for ln, pairs in by_len.items():
+        dedup = dict(pairs)
+        keys = np.fromiter(dedup.keys(), dtype=np.uint64, count=len(dedup))
+        vals = np.fromiter(dedup.values(), dtype=np.int8, count=len(dedup))
+        order = np.argsort(keys)
+        gaz[ln] = (keys[order], vals[order])
+    return gaz
+
+
+def _random_dict(seed: int) -> pd.DataFrame:
+    """Aliases of 1-6 tokens (so some exceed MAX_ALIAS_TOKENS) over a small
+    vocabulary, with repeats that carry a different class, odd whitespace
+    and an all-blank alias."""
+    import random
+
+    from kgpipe.schemas import ENT_CLASSES
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(12)] + ["acme", "zephyr", "é", "ß"]
+    aliases = [" ".join(rng.choice(vocab) for _ in range(rng.randint(1, 6)))
+               for _ in range(300)]
+    aliases += [rng.choice(aliases) for _ in range(120)]  # duplicates
+    aliases += ["  acme\tcorp ", "   "]
+    rng.shuffle(aliases)
+    return pd.DataFrame({
+        "alias": aliases,
+        "ent_class": [rng.choice(ENT_CLASSES) for _ in aliases],
+    })
+
+
+def test_vectorized_gazetteer_equals_per_alias_builder(unit_fixture_dir):
+    import os
+
+    import numpy as np
+
+    dicts = [_random_dict(s) for s in range(8)] + [
+        DICT, pd.read_parquet(os.path.join(unit_fixture_dir,
+                                           "candidate_dict.parquet"))]
+    for cd in dicts:
+        want = _per_alias_gazetteer(cd)
+        got = build_gazetteer(cd)
+        assert list(got) == list(want)  # same lengths, same order
+        for ln, (keys, vals) in want.items():
+            g_keys, g_vals = got[ln]
+            assert g_keys.dtype == keys.dtype and g_vals.dtype == vals.dtype
+            assert np.array_equal(g_keys, keys)
+            assert np.array_equal(g_vals, vals)
+    # the generated dictionaries exercise every branch of the builder
+    cd = dicts[0]
+    n_tok = cd["alias"].str.split().str.len()
+    assert (n_tok == 1).any() and (n_tok > 4).any()
+    dup = cd[cd["alias"].duplicated(keep=False)]
+    assert (dup.groupby("alias")["ent_class"].nunique() > 1).any()
+    assert build_gazetteer(DICT.iloc[:0]) == {}

@@ -30,3 +30,51 @@ def test_entry_contract(spark):
     qs, os_ = se.queries(), se.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 40
+
+
+_IMPORT_PROBE = """
+import sys
+import kgpipe.fixtures.generator as gen
+
+calls = []
+
+def fake_materialize(scale, *a, **k):
+    calls.append(scale)
+    if sys.argv[1] == "fail":
+        raise OSError("read-only fixture dir")
+    return "/gold/" + scale
+
+gen.materialize = fake_materialize
+import __spark_entry__ as se
+from kgpipe.queries import ORACLES, QUERIES
+
+assert calls == [], calls  # importing the registry writes no fixture
+assert "kg_triples" in QUERIES
+oracles = se.oracle_sql()
+assert calls == ["sf0.01"], calls
+if sys.argv[1] == "fail":
+    assert not any(n.startswith("kg_") for n in oracles), sorted(oracles)
+    assert "kg_triples" not in ORACLES
+else:
+    assert "/gold/sf0.01/gold_triples.parquet" in oracles["kg_triples"]
+    assert "@" not in oracles["kg_triples"]
+assert len(oracles) > 40
+ORACLES.get("kg_triples"), list(ORACLES)
+assert calls == ["sf0.01"], calls  # resolved once
+"""
+
+
+@pytest.mark.parametrize("mode", ["ok", "fail"])
+def test_gold_fixture_written_on_first_oracle_access(mode):
+    """Importing the query registry must not write the sf0.01 gold
+    fixture; the first oracle access does, once. When that write fails,
+    the kg_* rows degrade to rows-only and every other oracle stays."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", _IMPORT_PROBE, mode],
+                          cwd=repo, capture_output=True, text=True,
+                          timeout=120)
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -115,3 +115,42 @@ def test_mentions_drop_null_span_elements(spark):
         "conv_id", "turn_idx", "surface").collect()
     assert [(r.conv_id, r.turn_idx, r.surface) for r in got] == [
         ("c1", 0, "alpha")]
+
+
+def test_product_run_builds_only_the_triples_plan(spark, unit_fixture_dir,
+                                                  monkeypatch):
+    """On the fused small-dictionary path a product run (only ``triples``
+    consumed) builds the gazetteer once, the fused extractor once and never
+    the standalone labeler; the intermediates are built on first access."""
+    import kgpipe.operators.labeler as labeler
+    import kgpipe.pipeline as pipeline
+
+    calls = {"build_gazetteer": 0, "extract_triples_fused": 0,
+             "label_transcripts": 0}
+
+    def counted(mod, name):
+        orig = getattr(mod, name)
+
+        def wrapper(*a, **k):
+            calls[name] += 1
+            return orig(*a, **k)
+
+        monkeypatch.setattr(mod, name, wrapper)
+
+    counted(labeler, "build_gazetteer")  # turn_digests imports it per call
+    counted(pipeline, "extract_triples_fused")
+    counted(pipeline, "label_transcripts")
+
+    out = pipeline.run_from_dir(spark, unit_fixture_dir)
+    assert out["triples"].count() > 0
+    assert calls == {"build_gazetteer": 1, "extract_triples_fused": 1,
+                     "label_transcripts": 0}
+    assert {"labeled", "mentions", "linked", "raw_triples"} <= set(out)
+    assert "linked" in out and calls["label_transcripts"] == 0
+
+    # on demand: linked builds labeled -> mentions -> linked, each once
+    assert out["linked"] is out["linked"]
+    assert out["mentions"] is out["mentions"]
+    assert calls["label_transcripts"] == 1
+    assert out["raw_triples"] is not None
+    assert calls["extract_triples_fused"] == 2

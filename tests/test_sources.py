@@ -100,3 +100,52 @@ def test_checkpointed_pipeline_over_jsonl(spark, unit_fixture_dir, dumps,
     got = {tuple(r) for r in out["triples"]
            .select("subj", "pred", "obj", "conv_id", "turn_idx").collect()}
     assert got == want and got
+
+
+def test_locate_transcripts_missing_input_names_probed_paths(tmp_path):
+    from kgpipe.pipeline import locate_transcripts
+
+    with pytest.raises(FileNotFoundError) as err:
+        locate_transcripts(str(tmp_path))
+    for ext in ("parquet", "jsonl", "csv"):
+        assert str(tmp_path / f"transcripts.{ext}") in str(err.value)
+    (tmp_path / "transcripts.csv").write_text("")
+    assert locate_transcripts(str(tmp_path)) == str(
+        tmp_path / "transcripts.csv")
+
+
+@pytest.mark.parametrize("fmt", ["jsonl", "csv"])
+def test_cli_over_text_formats(unit_fixture_dir, dumps, tmp_path, fmt):
+    """The CLI's plain path resolves the input like run_from_dir: a fixture
+    dir whose transcripts are a JSONL or CSV dump reaches planted-gold
+    P/R 1.0, and --trained-labeler samples the same file."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d, _ = dumps
+    fx = tmp_path / f"{fmt}_fixture"
+    fx.mkdir()
+    shutil.copy(os.path.join(d, f"transcripts.{fmt}"),
+                fx / f"transcripts.{fmt}")
+    for f in ("candidate_dict.parquet", "gold_triples.parquet"):
+        shutil.copy(os.path.join(unit_fixture_dir, f), fx / f)
+
+    def cli(*extra):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(repo, "run_pipeline.py"),
+             "--input", str(fx), "--output", str(tmp_path / "kg"),
+             "--master", "local[2]", "--eval", *extra],
+            cwd=repo, capture_output=True, text=True, timeout=300)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    rec = cli()
+    assert rec["metrics"]["precision"] == 1.0, rec
+    assert rec["metrics"]["recall"] == 1.0, rec
+    assert rec["triples"] > 0
+    if fmt == "jsonl":
+        rec = cli("--trained-labeler")
+        m = rec["metrics"]
+        assert m["precision"] >= 0.95 and m["recall"] >= 0.95, rec
