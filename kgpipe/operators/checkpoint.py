@@ -35,7 +35,9 @@ the run dir and returned to the caller. Row counts come from parquet
 footers (pyarrow, driver-side) — zero extra Spark jobs.
 
 At 100 TB scale the same layout holds: n_buckets scales with input volume
-(buckets ≈ a few executor-tasks' worth of data each), the manifest stays
+(buckets ≈ a few executor-tasks' worth of data each) and sets the resume
+granularity only — the number of write tasks is sized by AQE from the
+stage's shuffle bytes, not by the bucket count. The manifest stays
 tiny (one row per bucket, not per row), and the dynamic-partition-overwrite
 commit is what Iceberg's ``overwritePartitions`` gives natively on the
 production path (sources/storage.py).
@@ -207,12 +209,15 @@ class CheckpointedRun:
                 if BUCKET_COL not in out.columns:
                     out = out.withColumn(
                         BUCKET_COL, _bucket_expr(key_col, n_buckets))
-                # align tasks with output partitions: without this every
-                # task writes a sliver into every bucket dir (n_tasks ×
-                # n_buckets tiny files); with it each bucket is one file
-                # written by one task — same property Iceberg gets from a
-                # bucket-transform write distribution.
-                writer = out.repartition(len(todo), F.col(BUCKET_COL))
+                # cluster rows by bucket: without this every task writes a
+                # sliver into every bucket dir (n_tasks × n_buckets tiny
+                # files). Each bucket hashes to one shuffle partition, so
+                # each bucket dir gets one file (several only if AQE splits
+                # a skewed bucket; footers are summed), while the number of
+                # write tasks comes from AQE sizing the shuffle to its
+                # bytes — same property Iceberg gets from a bucket-
+                # transform write distribution, without a task per bucket.
+                writer = out.hint("rebalance", BUCKET_COL)
             (writer.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(BUCKET_COL)
@@ -307,28 +312,33 @@ class CheckpointedRun:
         completeness. Footer reads are driver-side metadata only (no Spark
         job, ~ms per bucket).
 
-        An all-empty stage (zero rows in every bucket -> no parquet files
-        on disk) returns an empty DataFrame built from the recorded output
-        schema instead of failing with 'unable to infer schema'."""
+        The scan is planned from the manifest like ``read_triples``: it
+        reads exactly the validated non-empty bucket dirs with the
+        recorded output schema, so Spark neither lists the stage dir nor
+        infers the schema from footers. An all-empty stage (zero rows in
+        every bucket -> no parquet files on disk) returns an empty
+        DataFrame of that schema instead of failing with 'unable to infer
+        schema'. A run dir without ``_schema.json`` (written before the
+        schema was recorded) falls back to a directory read."""
         from pyspark.sql import types as _T
 
-        any_files = False
+        bucket_dirs = []
         for b, row in sorted(done.items()):
             expect = int(row.get("rows_out", 0))
             bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
             actual = _parquet_rows(bdir) if os.path.isdir(bdir) else 0
             if actual > 0:
-                any_files = True
+                bucket_dirs.append(bdir)
             if actual != expect:
                 raise RuntimeError(
                     f"stage {name!r} bucket {b}: manifest records {expect} "
                     f"rows but {bdir} holds {actual} — checkpoint data was "
                     f"deleted or modified out-of-band; remove the run_dir "
                     f"stage to force recomputation")
-        if any_files:
-            return self.spark.read.parquet(data_dir).drop(BUCKET_COL)
         schema_path = os.path.join(self.run_dir, name, "_schema.json")
         if not os.path.exists(schema_path):
+            if bucket_dirs:
+                return self.spark.read.parquet(data_dir).drop(BUCKET_COL)
             raise RuntimeError(
                 f"stage {name!r}: all buckets are empty and no _schema.json "
                 f"was recorded (run_dir written by a pre-schema version?) — "
@@ -336,6 +346,10 @@ class CheckpointedRun:
                 f"recomputation")
         with open(schema_path) as f:
             schema = _T.StructType.fromJson(json.loads(f.read()))
+        if bucket_dirs:
+            # each bucket dir is a scan root, so no _ckpt_bucket partition
+            # column is discovered
+            return self.spark.read.schema(schema).parquet(*bucket_dirs)
         return self.spark.createDataFrame([], schema)
 
     def write_metrics(self) -> str:

@@ -40,6 +40,15 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # shuffle widths, including the rebalance-hinted storage and
+        # checkpoint writes, come from AQE sizing each shuffle to its
+        # bytes. Its default 1 MB floor per coalesced partition assumes
+        # wide rows; the pipeline's narrow ~50-byte digest rows carry far
+        # more CPU per shuffle byte (sort_array, filter, explode in the
+        # window), and at 1 MB a 0.6 MB shuffle ran its window on one
+        # core. Above ~cores x 1 MB of shuffle this floor changes nothing.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -10,9 +10,13 @@ Layout decisions that matter at 100 TB:
 
 * partition by ``pred`` — low-cardinality, prunes whole predicates on read
   (Catalyst static partition pruning).
-* repartition by hash(subj) before the write so files are evenly sized and
-  subject-key locality is preserved for downstream graph joins (the parquet
-  stand-in for Iceberg's bucket(subj) transform).
+* rebalance by hash(subj) before the write so subject-key locality is
+  preserved for downstream graph joins (the parquet stand-in for Iceberg's
+  bucket(subj) transform). The write's width comes from AQE, not a
+  constant: it merges small shuffle partitions and splits ones over the
+  advisory size, so a 300 KB table commits a few files per ``pred`` and a
+  100 TB one still gets ~64 MB files (see ``session.get_spark`` for the
+  64k coalescing floor).
 
 Snapshot emulation (SURVEY §4.4: "partitioned parquet + a manifest JSON
 emulating snapshot/partition listing"): the parquet path reproduces the
@@ -149,14 +153,14 @@ def _commit_snapshot(path: str, snap_dir: str, snapshot_id: int,
     return snap
 
 
-def write_triples(triples: DataFrame, path: str, n_buckets: int = 16) -> int:
+def write_triples(triples: DataFrame, path: str) -> int:
     """Commit the triples table as a new snapshot; returns the row count
     (via a single ``observe`` pass — no extra job)."""
     from pyspark.sql import Observation
 
     obs = Observation("write_triples")
     t = triples.observe(obs, F.count(F.lit(1)).alias("rows"))
-    t = t.repartition(n_buckets, "subj")
+    t = t.hint("rebalance", "subj")
     if TABLE_FORMAT == "iceberg":
         # production path: df.writeTo(path).partitionedBy('pred',
         # bucket(n, 'subj')).createOrReplace() — requires the Iceberg

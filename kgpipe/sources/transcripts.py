@@ -10,8 +10,9 @@ Scale notes:
 * JSONL is line-delimited (the default ``multiLine=False``), so the scan
   splits by line across executors like any text source — a 100-TB dump
   parallelizes without coordination. CSV with quoted multi-line text
-  needs ``multiLine=True``, which makes each FILE one split — documented
-  here so callers shard CSV dumps into many files (or prefer JSONL).
+  needs ``multiLine=True``, which makes each FILE one split, so callers
+  shard CSV dumps into many files (or prefer JSONL); a read of fewer
+  files than cores warns.
 * ``FAILFAST`` by default: a malformed record in a trusted drop is a
   pipeline bug to surface, not a row to silently null out. Callers
   ingesting scraped data can pass ``mode='PERMISSIVE'`` and filter.
@@ -23,6 +24,7 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,8 +50,10 @@ def read_transcripts_csv(spark: SparkSession, path: str,
     """CSV transcripts (header row, RFC-4180 quoting) -> TRANSCRIPTS shape.
 
     ``multiLine=True`` so quoted turn text may contain newlines — at the
-    cost of one split per file; shard big CSV dumps or prefer JSONL."""
-    return (
+    cost of one split per file; shard big CSV dumps or prefer JSONL. Warns
+    when there are fewer files than ``defaultParallelism``, because the
+    scan (and everything fused into it) then runs on fewer cores."""
+    df = (
         spark.read.schema(TRANSCRIPTS)
         .option("header", True)
         .option("mode", mode)
@@ -58,6 +62,16 @@ def read_transcripts_csv(spark: SparkSession, path: str,
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]")
         .csv(path)
     )
+    # the file index is built when the DataFrame is created: no extra job
+    n_files = len(df.inputFiles())
+    cores = spark.sparkContext.defaultParallelism
+    if n_files < cores:
+        warnings.warn(
+            f"{path}: {n_files} multiLine CSV file(s) for defaultParallelism "
+            f"{cores} — each file is one split, so the scan runs at most "
+            f"{n_files} task(s); shard the dump into >= {cores} files or "
+            f"convert it to JSONL/parquet", stacklevel=2)
+    return df
 
 
 def read_transcripts_any(spark: SparkSession, path: str,

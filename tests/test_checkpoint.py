@@ -302,3 +302,43 @@ def test_default_layout_is_digests(spark, fixture_dir, plain_triples,
     import run_pipeline as cli
     cli_src = inspect.getsource(cli.main)
     assert '"--stage-layout", default="digests"' in cli_src
+
+
+def test_stage_layout_and_manifest_planned_read(spark, fixture_dir,
+                                                tmp_path_factory):
+    """Every bucket dir of a computed stage holds exactly one parquet file
+    (each bucket lands in one shuffle partition of the write), and the
+    read-back is planned from the manifest: exactly the bucket files, with
+    the recorded schema in the recorded column order, and the same rows a
+    directory read of the stage returns."""
+    import glob
+
+    from pyspark.sql import types as T
+
+    from kgpipe.operators.checkpoint import BUCKET_COL, CheckpointedRun
+
+    run_dir = str(tmp_path_factory.mktemp("ckpt-layout"))
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    for stage in ("digests", "triples"):
+        data_dir = os.path.join(run_dir, stage, "data")
+        bdirs = glob.glob(os.path.join(data_dir, f"{BUCKET_COL}=*"))
+        assert bdirs
+        for bdir in bdirs:
+            files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+            assert len(files) == 1, (bdir, files)
+
+        fp = json.loads(open(os.path.join(
+            run_dir, stage, "manifest.jsonl")).readline())["fingerprint"]
+        df = CheckpointedRun(spark, run_dir).load_committed(stage, fp)
+        recorded = T.StructType.fromJson(json.load(open(
+            os.path.join(run_dir, stage, "_schema.json"))))
+        assert [(f.name, f.dataType) for f in df.schema.fields] == \
+            [(f.name, f.dataType) for f in recorded.fields]
+        assert sorted(os.path.realpath(f.replace("file://", ""))
+                      for f in df.inputFiles()) == sorted(
+            os.path.realpath(p) for p in
+            glob.glob(os.path.join(data_dir, f"{BUCKET_COL}=*", "*.parquet")))
+        by_dir = spark.read.parquet(data_dir).drop(BUCKET_COL)
+        assert sorted(map(tuple, df.collect())) == \
+            sorted(map(tuple, by_dir.select(*df.columns).collect()))
+    assert out["metrics"]["triples"]["rows_out"] == out["triples"].count()

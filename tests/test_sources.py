@@ -57,6 +57,31 @@ def test_jsonl_and_csv_read_equal_parquet(spark, unit_fixture_dir, dumps):
         read_transcripts_any(spark, "x.parquet", fmt="orc2")
 
 
+def test_csv_read_warns_when_fewer_files_than_cores(spark, dumps, tmp_path):
+    """multiLine CSV is one split per file: a dump of fewer files than
+    defaultParallelism warns, naming both counts; a dump sharded into at
+    least that many files does not."""
+    import warnings
+
+    d, pdf = dumps
+    cores = spark.sparkContext.defaultParallelism
+    with pytest.warns(UserWarning,
+                      match=rf"1 multiLine CSV file\(s\) for "
+                            rf"defaultParallelism {cores}\b"):
+        read_transcripts_csv(spark, os.path.join(d, "transcripts.csv"))
+
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    for i in range(cores):
+        pdf.iloc[i::cores].to_csv(shards / f"part-{i}.csv", index=False,
+                                  date_format="%Y-%m-%dT%H:%M:%S.%f")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        df = read_transcripts_csv(spark, str(shards))
+    assert _rows(df) == _rows(read_transcripts_csv(
+        spark, os.path.join(d, "transcripts.csv")))
+
+
 def test_pipeline_end_to_end_over_jsonl(spark, unit_fixture_dir, dumps,
                                         tmp_path):
     """A fixture dir whose transcripts are a JSONL dump (no parquet) must

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 
@@ -227,3 +228,22 @@ def test_expire_cleans_old_staging_orphans(spark, tmp_path, v1_rows):
     assert not os.path.exists(old)
     assert os.path.exists(new)
     assert read_triples(spark, path).count() == 30
+
+
+def test_write_width_sized_by_aqe_not_a_constant(spark, tmp_path):
+    """A small table commits at most defaultParallelism files per pred
+    partition: the write's shuffle is a rebalance that AQE sizes from its
+    bytes, not a fixed fan-out that writes a sliver per task into every
+    partition."""
+    rows = [(f"e{i}", "works_at", f"o{i % 7}", f"c{i}", i, 1.0)
+            for i in range(400)] + \
+           [(f"e{i}", "studied_at", f"u{i % 5}", f"c{i}", i, 0.9)
+            for i in range(200)]
+    path = str(tmp_path / "tbl")
+    assert write_triples(_df(spark, rows), path) == 600
+    snap = json.load(open(os.path.join(path, "metadata", "snap-000001.json")))
+    per_pred = Counter(m["partition"]["pred"] for m in snap["manifest"])
+    assert set(per_pred) == {"works_at", "studied_at"}
+    assert max(per_pred.values()) <= spark.sparkContext.defaultParallelism, \
+        per_pred
+    assert _tset(read_triples(spark, path)) == _tset(_df(spark, rows))
